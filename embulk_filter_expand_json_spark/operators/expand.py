@@ -181,14 +181,17 @@ def flag_invalid_records(
         # extraction over a malformed doc is NULL already, and the cast
         # kernels treat NULL input as no-error, so `malformed` alone
         # classifies those rows)
+        prefix = "__exc_"
+        while any(c.startswith(prefix) for c in df.columns):
+            prefix = "_" + prefix  # input shadows the scratch prefix: lengthen
         pre = [
-            F.get_json_object(doc, _gjo_path(cp)).alias(f"__exc_{i}")
+            F.get_json_object(doc, _gjo_path(cp)).alias(f"{prefix}{i}")
             for i, cp in enumerate(compiled)
         ]
         step = df.select("*", *pre)
         cast_err: Column = F.lit(False)
         for i, (spec, cp) in enumerate(zip(plan.specs, compiled)):
-            _val, e = _catalyst_cast(F.col(f"__exc_{i}"), spec, session_tz)
+            _val, e = _catalyst_cast(F.col(f"{prefix}{i}"), spec, session_tz)
             cast_err = cast_err | e
         reason = F.when(malformed, F.lit("malformed_document")).when(
             cast_err, F.lit("cast_error")

@@ -22,7 +22,6 @@ ExpandJsonFilterPlugin.java:98-137 — our engine owns it explicitly).
 from __future__ import annotations
 
 import json
-import os
 import time
 from dataclasses import dataclass, field
 from typing import List, Optional, Sequence
@@ -383,12 +382,7 @@ class CdcPipeline:
                 else:
                     self._evolve(changes, m)
                 if result.get("orphaned_dir"):
-                    import shutil
-
-                    shutil.rmtree(
-                        os.path.join(self.table.path, result["orphaned_dir"]),
-                        ignore_errors=True,
-                    )
+                    self.table._discard_commit_dir(result["orphaned_dir"])
                 result = self._run_merge(changes, epoch, m, detect_drift=False)
         else:
             # streaming/foreachBatch path: Observations don't resolve there,
@@ -981,12 +975,7 @@ class CdcPipeline:
             # like the drift abort) and fail loudly — the epoch replays
             # after the producer fix
             if res.get("orphaned_dir"):
-                import shutil
-
-                shutil.rmtree(
-                    os.path.join(self.table.path, res["orphaned_dir"]),
-                    ignore_errors=True,
-                )
+                self.table._discard_commit_dir(res["orphaned_dir"])
             raise ExpectationFailed(
                 f"epoch {epoch} aborted: expectation(s) violated — "
                 + "; ".join(exp_fail_holder)

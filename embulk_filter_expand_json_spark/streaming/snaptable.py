@@ -81,8 +81,9 @@ import time
 import uuid
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.types import _make_type_verifier
 
 from .fs import PublishConflict, TableFS, fs_for_path
 
@@ -94,6 +95,14 @@ _EXPLICIT_BUCKET_TASKS = 256
 
 class CommitConflict(RuntimeError):
     pass
+
+
+def _bucket_of(key: Column, num_buckets: int) -> Column:
+    """The hash layout: the bucket a merge-key value lives in. Every writer
+    and :meth:`SnapTable.lookup` compute buckets through this one
+    expression, so a probe always lands in the bucket its key was written
+    to."""
+    return F.pmod(F.xxhash64(key), F.lit(num_buckets))
 
 
 class SnapTable:
@@ -741,6 +750,30 @@ class SnapTable:
         schema = T.StructType.fromJson(man["schema"])
         return self._state_df(man, schema, buckets=sorted(set(buckets)))
 
+    def _probe_buckets(
+        self, values: List, key: T.StructField, num_buckets: int
+    ) -> List[int]:
+        """Sorted distinct buckets of driver-side probe ``values``. Each value
+        must be one the ``key`` column can hold, checked as createDataFrame
+        checks a row except that a string key takes only ``str``: a probe is
+        never cast into the key type and hashed as something else. All
+        values ride ONE array column, so the plan stays one expression
+        however many keys are probed, and ``ConvertToLocalRelation``
+        evaluates it while optimizing: ``collect`` schedules no job."""
+        verify = _make_type_verifier(key.dataType, name=key.name)
+        is_str = isinstance(key.dataType, T.StringType)
+        for v in values:
+            if is_str and v is not None and not isinstance(v, str):
+                raise TypeError(
+                    f"lookup value {v!r} ({type(v).__name__}) is not a "
+                    f"string, the type of key {key.name!r}"
+                )
+            verify(v)
+        probes = F.array(*[F.lit(v).cast(key.dataType) for v in values])
+        b = F.transform(probes, lambda x: _bucket_of(x, num_buckets))
+        row = self.spark.sql("VALUES (0) AS t(x)").select(b).first()
+        return sorted(set(row[0]))
+
     def lookup(
         self, values: List, version: Optional[int] = None
     ) -> DataFrame:
@@ -750,33 +783,16 @@ class SnapTable:
         design scale with thousands of buckets this turns a key lookup from
         an every-file scan into a handful of file reads.
 
-        The bucket of each key is resolved with the same Catalyst
-        ``xxhash64`` the writer used, via one row-sized Spark job (no table
-        data touched)."""
+        The bucket of each key is resolved by the writer's own Catalyst
+        hash (:func:`_bucket_of`) over a one-row inline table; Spark folds
+        that projection into a local relation at plan time, so resolving
+        the buckets runs no Spark job and the read below is the only one."""
         man = self.manifest(version)
-        if not values:
-            return self.spark.createDataFrame(
-                [], T.StructType.fromJson(man["schema"])
-            )
-        key = man["key"]
-        num_buckets = man["num_buckets"]
-        key_type = [
-            f.dataType
-            for f in T.StructType.fromJson(man["schema"]).fields
-            if f.name == key
-        ][0]
-        vals_df = self.spark.createDataFrame(
-            [(v,) for v in values], T.StructType([T.StructField("v", key_type)])
-        )
-        buckets = sorted(
-            r[0]
-            for r in vals_df.select(
-                F.pmod(F.xxhash64("v"), F.lit(num_buckets)).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
         schema = T.StructType.fromJson(man["schema"])
+        if not values:
+            return self.spark.createDataFrame([], schema)
+        key = man["key"]
+        buckets = self._probe_buckets(values, schema[key], man["num_buckets"])
         non_null = [v for v in values if v is not None]
         probe_null = len(non_null) < len(values)
 
@@ -849,10 +865,12 @@ class SnapTable:
                 "restart this consumer from a full snapshot read"
             )
         schema = T.StructType.fromJson(man["schema"])
+        # nullable as the left join below types them (a NULL never reaches
+        # a reader), so an empty window has the same schema as a full one
         meta_fields = [
-            T.StructField("_change_type", T.StringType(), False),
-            T.StructField("_commit_version", T.LongType(), False),
-            T.StructField("_commit_epoch", T.LongType(), False),
+            T.StructField("_change_type", T.StringType()),
+            T.StructField("_commit_version", T.LongType()),
+            T.StructField("_commit_epoch", T.LongType()),
         ]
         flat = [
             (f, entry["version"], entry["epoch"])
@@ -872,65 +890,50 @@ class SnapTable:
         # node regardless of window length. The join key is the last 5
         # path components (commit dir / stage dir / bucket / flag / part
         # file — scheme- and mount-independent, and the commit dir plus
-        # the write job's UUID in the part name make it unique); the
-        # (cheap, driver-side) uniqueness check below falls back to the
-        # per-commit union rather than ever risking a wrong join.
+        # the write job's UUID in the part name make it unique). The join
+        # keeps every scanned row: one whose path matches no manifest entry
+        # fails the read inside the same projection rather than vanishing.
         def _suffix5(p: str) -> str:
             return "/".join(p.split("/")[-5:])
 
         names = [_suffix5(f["path"]) for f, _, _ in flat]
-        if len(set(names)) == len(names):
-            meta_df = self.spark.createDataFrame(
-                [
-                    (
-                        n,
-                        "delete" if bool(f["delete"]) else "upsert",
-                        int(v),
-                        int(e),
-                    )
-                    for n, (f, v, e) in zip(names, flat)
-                ],
-                T.StructType(
-                    [T.StructField("__fn", T.StringType(), False)]
-                    + meta_fields
+        if len(set(names)) != len(names):
+            raise ValueError(
+                "cannot attribute change files to commits: "
+                f"{len(names) - len(set(names))} change file(s) after version "
+                f"{since_version} share their last 5 path components"
+            )
+        fn = "__fn"
+        while fn in schema.fieldNames():
+            fn = "_" + fn  # the table shadows the scratch name: lengthen
+        meta_df = self.spark.createDataFrame(
+            [
+                (n, "delete" if bool(f["delete"]) else "upsert", int(v), int(e))
+                for n, (f, v, e) in zip(names, flat)
+            ],
+            T.StructType([T.StructField(fn, T.StringType(), False)] + meta_fields),
+        )
+        change_type = F.when(
+            F.col("_change_type").isNull(),
+            F.raise_error(
+                F.concat(
+                    F.lit("change file matches no manifest change entry: "),
+                    F.col(fn),
+                )
+            ),
+        ).otherwise(F.col("_change_type"))
+        return (
+            self._read_files([f for f, _, _ in flat], schema)
+            .withColumn(
+                fn,
+                F.concat_ws(
+                    "/", F.slice(F.split(F.col("_metadata.file_path"), "/"), -5, 5)
                 ),
             )
-            return (
-                self._read_files([f for f, _, _ in flat], schema)
-                .withColumn(
-                    "__fn",
-                    F.concat_ws(
-                        "/",
-                        F.slice(
-                            F.split(F.col("_metadata.file_path"), "/"), -5, 5
-                        ),
-                    ),
-                )
-                .join(F.broadcast(meta_df), on="__fn", how="inner")
-                .drop("__fn")
-            )
-        frames = []  # pragma: no cover — duplicate part filenames
-        for entry in man["changes"]:
-            if entry["version"] <= since_version:
-                continue
-            for is_del, ctype in ((False, "upsert"), (True, "delete")):
-                fs = [f for f in entry["files"] if bool(f["delete"]) == is_del]
-                if not fs:
-                    continue
-                frames.append(
-                    self._read_files(fs, schema)
-                    .withColumn("_change_type", F.lit(ctype))
-                    .withColumn(
-                        "_commit_version", F.lit(entry["version"]).cast("long")
-                    )
-                    .withColumn(
-                        "_commit_epoch", F.lit(entry["epoch"]).cast("long")
-                    )
-                )
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
+            .join(F.broadcast(meta_df), on=fn, how="left")
+            .withColumn("_change_type", change_type)
+            .drop(fn)
+        )
 
     def read_where(
         self, col: str, lo=None, hi=None, version: Optional[int] = None
@@ -1185,7 +1188,7 @@ class SnapTable:
         for f in schema.fields:
             if f.name not in aligned.columns:
                 aligned = aligned.withColumn(f.name, F.lit(None).cast(f.dataType))
-        bucket_of = F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
+        bucket_of = _bucket_of(F.col(key), num_buckets)
         aligned = aligned.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields],
             F.col("__is_delete"),
@@ -1800,7 +1803,7 @@ class SnapTable:
         last_err: Optional[Exception] = None
         for _ in range(max_commit_retries + 1):
             # touched buckets: one tiny job over the (delta-sized) source
-            bucket_of = F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
+            bucket_of = _bucket_of(F.col(key), num_buckets)
             buckets = sorted(
                 r[0]
                 for r in source.select(bucket_of.alias("b")).distinct().collect()
@@ -2035,7 +2038,7 @@ class SnapTable:
         schema = T.StructType.fromJson(man["schema"])
         key = man["key"]
         df = self._state_df(man, schema).withColumn(
-            "__bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
+            "__bucket", _bucket_of(F.col(key), num_buckets)
         )
         commit_rel = os.path.join(
             "data", f"{prefix}{man['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"

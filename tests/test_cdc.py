@@ -398,3 +398,24 @@ def test_expected_columns_skip_drift_redo(spark, tmp_path):
         return sorted(map(repr, t.read().select(*cols).collect()))
 
     assert state(dec.table) == state(dyn.table)
+
+
+def test_drift_abort_cleans_up_on_a_uri_table(spark, tmp_path):
+    """The drift detour discards its first stage write through the table's
+    filesystem layer, so a table addressed by URI is left with no orphaned
+    commit directory, as a plain-path table is."""
+    path = str(tmp_path / "log")
+    write_changes(
+        spark,
+        ChangeGenConfig(
+            n_events=500, n_docs=40, batch_size=500, seed=11, p_extra_key=0.5
+        ),
+        path,
+    )
+    root = tmp_path / "table"
+    pipe = CdcPipeline(spark, path, f"file://{root}", num_buckets=4)
+    m = pipe.apply_epoch(0)
+    assert m.evolved_columns == ["lang"]
+    referenced = {f["path"].split("/")[1] for f in pipe.table.manifest()["files"]}
+    on_disk = set(os.listdir(root / "data"))
+    assert on_disk == referenced

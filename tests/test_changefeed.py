@@ -291,3 +291,75 @@ def test_history_and_timestamp_travel(spark, tmp_path):
         t.version_as_of(hist[0]["committed_at"] - 10.0)
     with pytest.raises(ValueError, match="at most one"):
         t.read(version=1, as_of_ts=ts_mid)
+
+
+def test_read_changes_keeps_a_column_named_like_the_join_scratch(spark, tmp_path):
+    """A table column called ``__fn`` survives the feed read: the path
+    join's scratch column takes a longer name instead of replacing it."""
+    from pyspark.sql import types as T
+
+    t = SnapTable(spark, str(tmp_path / "t"))
+    t.create(
+        T.StructType(
+            [T.StructField("k", T.StringType()), T.StructField("__fn", T.LongType())]
+        ),
+        key="k",
+        num_buckets=2,
+        properties={"changelog": True},
+    )
+    t.merge(spark.createDataFrame([("a", 1), ("b", 2)], t.schema()), epoch=0)
+    feed = t.read_changes(0)
+    assert feed.columns == ["k", "__fn", "_change_type", "_commit_version",
+                            "_commit_epoch"]
+    assert sorted((r["k"], r["__fn"], r["_change_type"]) for r in feed.collect()) == [
+        ("a", 1, "upsert"), ("b", 2, "upsert")
+    ]
+
+
+def test_read_changes_fails_on_a_file_it_cannot_attribute(spark, tmp_path):
+    """A change file the path join cannot attribute to a commit fails the
+    read loudly; its rows are never dropped from the feed. Here the file's
+    name holds a space, which ``_metadata.file_path`` percent-encodes, so
+    the scanned path no longer matches the manifest's."""
+    import json
+
+    t = make_table(spark, tmp_path / "t", buckets=2)
+    t.merge(
+        delta(spark, [(f"k{i}", [i], 1, "s", False) for i in range(6)]),
+        epoch=0,
+        delete_col="is_del",
+    )
+    assert len(t.read_changes(0).collect()) == 6
+    log = os.path.join(t.path, "_log", f"v{t.manifest()['version']:08d}.json")
+    with open(log) as fh:
+        man = json.load(fh)
+    entry = man["changes"][-1]["files"][0]
+    old = entry["path"]
+    new = os.path.join(os.path.dirname(old), "part with space.parquet")
+    os.rename(os.path.join(t.path, old), os.path.join(t.path, new))
+    for f in [entry] + [f for f in man["files"] if f["path"] == old]:
+        f["path"] = new
+    with open(log, "w") as fh:
+        json.dump(man, fh)
+    with pytest.raises(Exception, match="matches no manifest change entry"):
+        t.read_changes(0).collect()
+
+
+def test_read_changes_rejects_ambiguous_change_paths(spark, tmp_path):
+    """Two manifest change entries whose paths the join cannot tell apart
+    fail the read up front instead of being read twice."""
+    import json
+
+    t = make_table(spark, tmp_path / "t", buckets=2)
+    t.merge(
+        delta(spark, [("a", [1], 1, "s", False)]), epoch=0, delete_col="is_del"
+    )
+    log = os.path.join(t.path, "_log", f"v{t.manifest()['version']:08d}.json")
+    with open(log) as fh:
+        man = json.load(fh)
+    files = man["changes"][-1]["files"]
+    files.append(dict(files[0]))
+    with open(log, "w") as fh:
+        json.dump(man, fh)
+    with pytest.raises(ValueError, match="cannot attribute change files"):
+        t.read_changes(0)

@@ -83,6 +83,17 @@ def test_reserved_column_collision_raises(spark, src):
         flag_invalid_records(src.withColumn("_invalid", F.lit(True)), CFG)
 
 
+def test_flag_scratch_prefix_yields_to_input_columns(spark, src):
+    """An input column named like the extraction scratch (``__exc_0``) is
+    kept verbatim, and the flags match those of the unshadowed input."""
+    shadowed = src.withColumn("__exc_0", F.lit("mine"))
+    got = {r["id"]: (r["__exc_0"], r["_invalid_reason"]) for r in
+           flag_invalid_records(shadowed, CFG, mode="catalyst").collect()}
+    want = {r["id"]: ("mine", r["_invalid_reason"]) for r in
+            flag_invalid_records(src, CFG, mode="catalyst").collect()}
+    assert got == want
+
+
 def test_paths_agree_on_flags(spark, src):
     a = {r["id"]: r["_invalid"] for r in
          flag_invalid_records(src, CFG, mode="catalyst").collect()}
