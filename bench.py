@@ -22,8 +22,8 @@ Headline queries:
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32) -> master local[N].
 Extra JSON keys beyond the contract: events_per_sec (cdc replay throughput),
-cpus (parallelism used) — used by scripts/scaling_bench.py for the N vs 4N
-scaling-efficiency evidence recorded in BASELINE.md.
+cpus (parallelism used) — the N vs 4N scaling-efficiency evidence recorded
+in BASELINE.md compares them across core counts.
 """
 
 from __future__ import annotations
@@ -287,7 +287,6 @@ def main() -> None:
             log_path,
             os.path.join(work, "table"),
             num_buckets=n_buckets,
-            collect_metrics=False,
             # change data feed on: recording change entries is zero extra
             # writes by design (the staged files are retained, not copied),
             # so cdc_replay stays comparable to earlier records — and it

@@ -101,6 +101,8 @@ class EpochMetrics:
     rebucketed_to: Optional[int] = None
     evolved_columns: List[str] = field(default_factory=list)
     buckets_touched: int = 0
+    #: the committed merge's per-phase wall seconds (a drift epoch: the redo)
+    phases: dict = field(default_factory=dict)
     skipped: bool = False
     wall_sec: float = 0.0
     start_offset: Optional[int] = None
@@ -121,8 +123,6 @@ class CdcPipeline:
         lww_strategy: str = "agg",
         num_buckets: int = 16,
         auto_evolve: bool = True,
-        collect_metrics: bool = True,
-        use_observations: bool = True,
         mor_rewrite_ratio: float = 0.2,
         max_delta_files_per_bucket: int = 8,
         min_mor_base_bytes: int = 64 * 1024 * 1024,
@@ -144,12 +144,6 @@ class CdcPipeline:
         self.order = order
         self.lww_strategy = lww_strategy
         self.auto_evolve = auto_evolve
-        self.collect_metrics = collect_metrics
-        #: single-pass side-aggregates via DataFrame.observe. Must be False
-        #: under Structured Streaming foreachBatch: Observation.get never
-        #: resolves there (the QueryExecutionListener that feeds it does not
-        #: fire for foreachBatch actions), so that path uses explicit scans.
-        self.use_observations = use_observations
         #: when set, expire_snapshots(keep_last=N) runs after every commit —
         #: REQUIRED for unbounded replay (10^10 events): every CoW rewrite
         #: retains superseded files for time travel, so without GC disk
@@ -190,7 +184,7 @@ class CdcPipeline:
         #:          after the producer fix — DLT's expect_or_fail)
         #: A NULL predicate is a violation (expectations assert truth).
         #: Violation counts ride the epoch's single-pass observation — no
-        #: extra job on the observed path.
+        #: extra job.
         self.expectations = [tuple(e) for e in expectations]
         seen = set()
         for name, _pred, action in self.expectations:
@@ -288,8 +282,9 @@ class CdcPipeline:
         )
 
     def _scan_new_keys(self, changes: DataFrame) -> List[str]:
-        """Exact new-key set — only run on the rare epoch where the
-        observation flag fired (schema drift)."""
+        """Exact new-key set of a quarantine redrive's repaired rows (one
+        key-scan job per redrive; the epoch path collects its drift keys
+        through the stage job's observation instead)."""
         known = set(self.table.schema().fieldNames()) | _BASE_KEYS
         rows = (
             changes.select(
@@ -346,7 +341,9 @@ class CdcPipeline:
     def apply_micro_batch(self, changes: DataFrame, epoch: int) -> EpochMetrics:
         """Apply an arbitrary change DataFrame as epoch ``epoch`` — shared
         by the bounded replay loop and the Structured Streaming front-end
-        (streaming/stream_apply.py, where epoch = streaming batch_id)."""
+        (streaming/stream_apply.py, where epoch = streaming batch_id). Both
+        take the same observed single pass: Observations resolve inside
+        ``foreachBatch`` too."""
         t0 = time.time()
         m = EpochMetrics(epoch=epoch)
         if epoch <= self.last_committed_epoch():
@@ -358,41 +355,32 @@ class CdcPipeline:
         if self.quarantine is not None:
             m.quarantined = self._quarantine_epoch(changes, epoch)
 
-        if self.use_observations:
-            # ---- single-pass epoch: every side-aggregate (schema-drift
-            # flag, offset range, invalid/dedup counts, touched-bucket set)
-            # rides the ONE stage-write action — CollectMetrics for the
-            # counters, the staged directory listing for the buckets. No
-            # pre-count, no key scan, no checkpoint job.
-            result = self._run_merge(changes, epoch, m)
-            if result.get("aborted"):
-                # rare path: an unknown payload key appeared in this epoch.
-                # The stage write was discarded pre-publish (and the rewrite
-                # never ran); evolve additively and redo the epoch with the
-                # extended expansion config. This abort is the pipeline's own
-                # decision (not a crash), so its staged files are reclaimed
-                # immediately instead of waiting for an orphan sweep.
-                dk = result.get("drift_keys")
-                if dk:
-                    # key names rode the observation — no separate scan job
-                    self.table.evolve_add_columns(
-                        [T.StructField(k, T.StringType(), True) for k in dk]
-                    )
-                    m.evolved_columns = dk
-                else:
-                    self._evolve(changes, m)
-                if result.get("orphaned_dir"):
-                    self.table._discard_commit_dir(result["orphaned_dir"])
-                result = self._run_merge(changes, epoch, m, detect_drift=False)
-        else:
-            # streaming/foreachBatch path: Observations don't resolve there,
-            # so drift is detected by an explicit up-front scan and metrics
-            # (when enabled) by explicit aggregations
-            if self.auto_evolve:
-                self._evolve(changes, m)
+        # ---- single-pass epoch: every side-aggregate (schema-drift keys,
+        # offset range, invalid/dedup counts, touched-bucket set) rides the
+        # ONE stage-write action — CollectMetrics for the counters, the
+        # staged directory listing for the buckets. No pre-count, no key
+        # scan, no checkpoint job.
+        result = self._run_merge(changes, epoch, m)
+        if result.get("aborted"):
+            # rare path: an unknown payload key appeared in this epoch (an
+            # expectation abort raises in _run_merge, so this one is drift).
+            # The stage write was discarded pre-publish (and the rewrite
+            # never ran); evolve additively and redo the epoch with the
+            # extended expansion config. This abort is the pipeline's own
+            # decision (not a crash), so its staged files are reclaimed
+            # immediately instead of waiting for an orphan sweep.
+            dk = result["drift_keys"]
+            # key names rode the observation — no separate scan job
+            self.table.evolve_add_columns(
+                [T.StructField(k, T.StringType(), True) for k in dk]
+            )
+            m.evolved_columns = dk
+            if result.get("orphaned_dir"):
+                self.table._discard_commit_dir(result["orphaned_dir"])
             result = self._run_merge(changes, epoch, m, detect_drift=False)
         m.skipped = result.get("skipped", False)
         m.buckets_touched = result.get("buckets_touched", 0)
+        m.phases = result.get("timings") or {}
         if self.auto_rebucket_bytes is not None and not m.skipped:
             man = self.table.manifest()
             base_bytes = sum(
@@ -456,14 +444,10 @@ class CdcPipeline:
                 num_buckets=8,
                 properties={"quarantine": True},
             )
-        obs = None
-        if self.collect_metrics and self.use_observations:
-            # foreachBatch path: Observations never resolve there (see
-            # __init__), so the count is simply not collected
-            obs = Observation()
-            quar = quar.observe(obs, F.count(F.lit(1)).alias("n"))
+        obs = Observation()
+        quar = quar.observe(obs, F.count(F.lit(1)).alias("n"))
         res = self.quarantine.merge(quar, epoch=epoch)
-        if res.get("skipped") or obs is None:
+        if res.get("skipped"):
             return 0
         if res.get("buckets_touched", 0) == 0:
             # clean epoch: zero staged rows, and AQE's empty-relation
@@ -765,14 +749,6 @@ class CdcPipeline:
         )
         return out
 
-    def _evolve(self, changes: DataFrame, m: EpochMetrics) -> None:
-        new_keys = self._scan_new_keys(changes)
-        if new_keys:
-            self.table.evolve_add_columns(
-                [T.StructField(k, T.StringType(), True) for k in new_keys]
-            )
-            m.evolved_columns = new_keys
-
     def _run_merge(
         self,
         changes: DataFrame,
@@ -782,7 +758,6 @@ class CdcPipeline:
     ) -> dict:
         from pyspark.sql import Observation
 
-        use_obs = self.use_observations
         extra_cols = [
             f.name for f in self.table.schema().fields if f.name not in _BASE_KEYS
         ]
@@ -790,32 +765,29 @@ class CdcPipeline:
             *[F.lit(k) for k in sorted(_BASE_KEYS | set(extra_cols))]
         )
 
-        observed = changes
-        obs_in = obs_valid = obs_out = None
-        if use_obs:
-            obs_in = Observation()
-            in_aggs = [
-                F.count(F.lit(1)).alias("rows_in"),
-                F.min(self.order).alias("lo"),
-                F.max(self.order).alias("hi"),
-            ]
-            if detect_drift and self.auto_evolve:
-                # collect the unknown key NAMES, not just a flag: on the
-                # rare drift abort the evolve step then needs no separate
-                # key-scan job. collect_set, not collect_list: the common
-                # drift mode is a producer adding the same key to EVERY
-                # row, and identical key-arrays dedupe in the aggregation
-                # buffer — the observation stays key-set-sized, never
-                # epoch-row-sized (when() nulls keep non-drifting rows out)
-                unknown_arr = F.array_except(
-                    F.json_object_keys("payload"), known_arr
-                )
-                in_aggs.append(
-                    F.collect_set(
-                        F.when(F.size(unknown_arr) > 0, unknown_arr)
-                    ).alias("drift_keys")
-                )
-            observed = changes.observe(obs_in, *in_aggs)
+        obs_in = Observation()
+        in_aggs = [
+            F.count(F.lit(1)).alias("rows_in"),
+            F.min(self.order).alias("lo"),
+            F.max(self.order).alias("hi"),
+        ]
+        if detect_drift and self.auto_evolve:
+            # collect the unknown key NAMES, not just a flag: on the rare
+            # drift abort the evolve step then needs no separate key-scan
+            # job. collect_set, not collect_list: the common drift mode is
+            # a producer adding the same key to EVERY row, and identical
+            # key-arrays dedupe in the aggregation buffer — the observation
+            # stays key-set-sized, never epoch-row-sized (when() nulls keep
+            # non-drifting rows out)
+            unknown_arr = F.array_except(
+                F.json_object_keys("payload"), known_arr
+            )
+            in_aggs.append(
+                F.collect_set(
+                    F.when(F.size(unknown_arr) > 0, unknown_arr)
+                ).alias("drift_keys")
+            )
+        observed = changes.observe(obs_in, *in_aggs)
 
         cfg = self._expand_config(extra_cols)
         # fan_out=False: the LWW exchange immediately downstream already
@@ -833,9 +805,8 @@ class CdcPipeline:
             F.col("source"),
             *[F.col(c) for c in extra_cols],
         ).filter(F.col("doc_id").isNotNull())
-        if use_obs:
-            obs_valid = Observation()
-            typed = typed.observe(obs_valid, F.count(F.lit(1)).alias("valid"))
+        obs_valid = Observation()
+        typed = typed.observe(obs_valid, F.count(F.lit(1)).alias("valid"))
 
         deduped = lww_dedup(
             typed, key=self.key, order=self.order, strategy=self.lww_strategy
@@ -847,65 +818,17 @@ class CdcPipeline:
             & ~F.coalesce(F.expr(pred), F.lit(False))
             for _name, pred, _action in self.expectations
         ]
-        if use_obs:
-            obs_out = Observation()
-            deduped = deduped.observe(
-                obs_out,
-                F.count(F.lit(1)).alias("n_out"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias(
-                    "deletes"
-                ),
-                # violation counts ride the same single pass
-                *[
-                    F.sum(F.when(v, 1).otherwise(0)).alias(f"exp_{i}")
-                    for i, v in enumerate(viols)
-                ],
-            )
-        elif self.collect_metrics:
-            # explicit metric aggregations (streaming path): a couple of
-            # small extra jobs per micro-batch
-            agg = changes.agg(
-                F.count(F.lit(1)).alias("rows_in"),
-                F.min(self.order).alias("lo"),
-                F.max(self.order).alias("hi"),
-            ).collect()[0]
-            m.rows_in, m.start_offset, m.end_offset = (
-                agg["rows_in"], agg["lo"], agg["hi"],
-            )
-            valid = typed.count()
-            by_op = {
-                r["op"]: r["n"]
-                for r in deduped.groupBy("op").agg(F.count("*").alias("n")).collect()
-            }
-            m.deletes = by_op.get("D", 0)
-            m.upserts = sum(v for k, v in by_op.items() if k != "D")
-            m.invalid = m.rows_in - valid
-            m.dedup_dropped = valid - (m.deletes + m.upserts)
-
-        if not use_obs and self.expectations:
-            # explicit path (streaming/foreachBatch): one small extra agg
-            counts = deduped.agg(
-                *[
-                    F.sum(F.when(v, 1).otherwise(0)).alias(f"exp_{i}")
-                    for i, v in enumerate(viols)
-                ]
-            ).collect()[0]
-            for i, (name, _pred, action) in enumerate(self.expectations):
-                n = counts[f"exp_{i}"] or 0
-                m.expectation_failures[name] = n
-                if action == "fail" and n > 0:
-                    raise ExpectationFailed(
-                        f"expectation {name!r} violated by {n} rows in "
-                        f"epoch {epoch}"
-                    )
-            if self.collect_metrics:
-                # merged-upsert metric reflects the post-drop count, same
-                # as the observed path
-                m.upserts -= sum(
-                    m.expectation_failures[name]
-                    for name, _p, a in self.expectations
-                    if a == "drop"
-                )
+        obs_out = Observation()
+        deduped = deduped.observe(
+            obs_out,
+            F.count(F.lit(1)).alias("n_out"),
+            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
+            # violation counts ride the same single pass
+            *[
+                F.sum(F.when(v, 1).otherwise(0)).alias(f"exp_{i}")
+                for i, v in enumerate(viols)
+            ],
+        )
         drop_viol = [
             v
             for v, (_n, _p, a) in zip(viols, self.expectations)
@@ -928,18 +851,16 @@ class CdcPipeline:
             # and can be runtime-empty (all-invalid epoch) — _obs_row
             # resolves their pruned-CollectMetrics case to zero counts
             vals = obs_in.get
-            if self.collect_metrics:
-                m.rows_in = vals["rows_in"]
-                m.start_offset = vals["lo"]
-                m.end_offset = vals["hi"]
-                valid = _obs_row(obs_valid).get("valid") or 0
-                out = _obs_row(obs_out)
-                m.deletes = out.get("deletes") or 0
-                m.upserts = (out.get("n_out") or 0) - m.deletes
-                m.invalid = vals["rows_in"] - valid
-                m.dedup_dropped = valid - (out.get("n_out") or 0)
+            m.rows_in = vals["rows_in"]
+            m.start_offset = vals["lo"]
+            m.end_offset = vals["hi"]
+            valid = _obs_row(obs_valid).get("valid") or 0
+            out = _obs_row(obs_out)
+            m.deletes = out.get("deletes") or 0
+            m.upserts = (out.get("n_out") or 0) - m.deletes
+            m.invalid = vals["rows_in"] - valid
+            m.dedup_dropped = valid - (out.get("n_out") or 0)
             if self.expectations:
-                out = _obs_row(obs_out)
                 dropped = 0
                 for i, (name, _pred, action) in enumerate(self.expectations):
                     n = out.get(f"exp_{i}") or 0
@@ -948,8 +869,7 @@ class CdcPipeline:
                         exp_fail_holder.append(f"{name} ({n} rows)")
                     elif action == "drop":
                         dropped += n
-                if self.collect_metrics:
-                    m.upserts -= dropped  # merged upserts, post-drop
+                m.upserts -= dropped  # merged upserts, post-drop
                 if exp_fail_holder:
                     return False  # abort pre-publish; raised below
             if detect_drift and self.auto_evolve:
@@ -967,7 +887,7 @@ class CdcPipeline:
             ),
             epoch=epoch,
             delete_col="__del",
-            pre_commit=pre_commit if use_obs else None,
+            pre_commit=pre_commit,
         )
         if exp_fail_holder:
             # the abort already discarded the stage pre-publish; reclaim

@@ -67,17 +67,17 @@ def run_streaming_apply(
     projection, so it composes with Structured Streaming untouched; the
     streaming batch_id is the epoch, same as the canonical tail)."""
     # reuse the batch pipeline's apply machinery; its own epoch loop is not
-    # used — foreachBatch drives it with the streaming batch_id as epoch
+    # used — foreachBatch drives it with the streaming batch_id as epoch,
+    # through the same observed single pass (drift keys, counts and
+    # expectation violations ride the stage write; Observation.get
+    # resolves inside foreachBatch), so each micro-batch appends the same
+    # lineage line to <table>/_checkpoints/offsets.jsonl as a batch epoch
     pipe = CdcPipeline(
         spark,
         changes_path=changes_path,
         table_path=table_path,
         lww_strategy=lww_strategy,
         num_buckets=num_buckets,
-        collect_metrics=False,
-        # Observation.get never resolves under foreachBatch (no
-        # QueryExecutionListener events there) — use explicit scans
-        use_observations=False,
         # data-quality expectations apply per micro-batch exactly as per
         # epoch (a fail-action raise fails the streaming query loudly;
         # the batch replays on restart after the producer fix)

@@ -91,7 +91,6 @@ def run(spark, argv) -> int:
     )
     ap.add_argument("--num-buckets", type=int, default=64)
     ap.add_argument("--no-evolve", action="store_true")
-    ap.add_argument("--quiet-metrics", action="store_true")
     ap.add_argument(
         "--gc-keep-snapshots",
         type=int,
@@ -198,7 +197,6 @@ def run(spark, argv) -> int:
         lww_strategy=args.strategy,
         num_buckets=args.num_buckets,
         auto_evolve=not args.no_evolve,
-        collect_metrics=not args.quiet_metrics,
         gc_keep_snapshots=args.gc_keep_snapshots,
         min_mor_base_bytes=args.min_mor_base_bytes,
         quarantine_path=args.quarantine,

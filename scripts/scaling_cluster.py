@@ -92,8 +92,7 @@ for _ in range(reps):
 expand_sec = min(expand_secs)
 
 from embulk_filter_expand_json_spark.streaming.pipeline import CdcPipeline
-pipe = CdcPipeline(spark, log_path, table_path, num_buckets=64,
-                   collect_metrics=False)
+pipe = CdcPipeline(spark, log_path, table_path, num_buckets=64)
 t0 = time.time()
 pipe.run(max_epochs=1)   # warm-up epoch, excluded on both sizes
 warm = time.time() - t0

@@ -250,10 +250,13 @@ def test_resume_from_checkpoint(spark, tmp_path, changes_path):
         range(2, CFG.n_events // CFG.batch_size)
     )
     assert table_state(p2.table) == oracle_state(spark, changes_path)
-    # lineage log covers every epoch
+    # lineage log covers every epoch, each with its merge's phase times
     with open(p2.offsets_log) as f:
         lines = [json.loads(line) for line in f]
     assert {l["epoch"] for l in lines} == set(range(CFG.n_events // CFG.batch_size))
+    for l in lines:
+        if not l["skipped"]:
+            assert {"stage_sec", "publish_sec"} <= set(l["phases"]), l
 
 
 def test_replay_idempotent_epoch_skip(spark, tmp_path, changes_path):
@@ -326,6 +329,27 @@ def test_epoch_job_counts(spark, tmp_path):
     # epoch 1: with 40 hot docs over 4 buckets every bucket has files ->
     # stage write + rewrite write + the rewrite's broadcast-key build
     assert n1 <= 3, f"expected <=3 jobs for a rewrite epoch, got {n1}"
+
+
+def test_empty_micro_batch_commits_with_zero_counts(
+    spark, tmp_path, changes_path
+):
+    """foreachBatch can hand the pipeline an empty batch. The observed
+    single pass commits its epoch with zero counts whether the batch is an
+    empty local relation, a partition-pruned scan or a filter(false)."""
+    pipe = CdcPipeline(spark, changes_path, str(tmp_path / "t"), num_buckets=4)
+    log = spark.read.parquet(changes_path)
+    empties = [
+        spark.createDataFrame([], log.schema),
+        log.filter(F.col("epoch") == 10**6),
+        log.filter(F.lit(False)),
+    ]
+    for epoch, batch in enumerate(empties):
+        m = pipe.apply_micro_batch(batch, epoch)
+        assert not m.skipped
+        assert (m.rows_in, m.invalid, m.upserts, m.deletes) == (0, 0, 0, 0)
+    assert pipe.last_committed_epoch() == len(empties) - 1
+    assert pipe.table.read().count() == 0
 
 
 def test_full_replay_parity_with_mor_deferral(spark, tmp_path, changes_path):
@@ -416,6 +440,8 @@ def test_drift_abort_cleans_up_on_a_uri_table(spark, tmp_path):
     pipe = CdcPipeline(spark, path, f"file://{root}", num_buckets=4)
     m = pipe.apply_epoch(0)
     assert m.evolved_columns == ["lang"]
+    # the aborted attempt never reached its phase split; the redo's is kept
+    assert {"stage_sec", "publish_sec"} <= set(m.phases)
     referenced = {f["path"].split("/")[1] for f in pipe.table.manifest()["files"]}
     on_disk = set(os.listdir(root / "data"))
     assert on_disk == referenced

@@ -246,12 +246,12 @@ def test_replay_cli_debezium_jsonl(spark, tmp_path):
             "--input-format", "debezium", "--envelope-text",
             "--decoded-log", str(tmp_path / "decoded"),
             "--envelope-epoch-size", str(cfg.batch_size),
-            "--num-buckets", "4", "--quiet-metrics",
+            "--num-buckets", "4",
         ])
         assert rc == 0
         rc = replay_cli.run(spark, [
             "--changes", canon, "--table", str(tmp_path / "t_canon"),
-            "--num-buckets", "4", "--quiet-metrics",
+            "--num-buckets", "4",
         ])
         assert rc == 0
 

@@ -115,30 +115,89 @@ def test_fail_aborts_before_publish_and_is_replayable(spark, tmp_path):
     assert state(pipe2) == {"a": 5, "b": 30}
 
 
-def test_explicit_metrics_path_matches(spark, tmp_path):
-    """use_observations=False (the foreachBatch regime) computes the same
-    counts and applies the same drops."""
+def lineage(table_path):
+    with open(f"{table_path}/_checkpoints/offsets.jsonl") as f:
+        return [json.loads(line) for line in f]
+
+
+def test_streaming_expectation_counts_in_lineage(spark, tmp_path):
+    """Under foreachBatch the micro-batch takes the same observed single
+    pass as a batch epoch: the same drop counts reach the lineage log, and
+    a fail-action violation fails the query before anything publishes."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from embulk_filter_expand_json_spark.streaming.snaptable import SnapTable
+    from embulk_filter_expand_json_spark.streaming.stream_apply import (
+        run_streaming_apply,
+    )
+
     log = str(tmp_path / "log")
     write_log(spark, log, [
         [("a", 5, "I"), ("b", 50, "I"), ("c", 45, "I")],
     ])
-    pipe = CdcPipeline(
-        spark, log, str(tmp_path / "t"), num_buckets=2,
-        use_observations=False,
+    t = str(tmp_path / "t")
+    q = run_streaming_apply(
+        spark, changes_path=log, table_path=t,
+        checkpoint_path=str(tmp_path / "ckpt"), num_buckets=2,
         expectations=[("small_doc", "n_tok < 40", "drop")],
     )
-    metrics = pipe.run()
-    assert state(pipe) == {"a": 5}
-    assert metrics[0].expectation_failures == {"small_doc": 2}
+    assert q.awaitTermination(120)
+    got = {r["doc_id"]: r["n_tok"] for r in SnapTable(spark, t).read().collect()}
+    assert got == {"a": 5}
+    (line,) = lineage(t)
+    assert line["expectation_failures"] == {"small_doc": 2}
 
-    pipe_fail = CdcPipeline(
-        spark, log, str(tmp_path / "t2"), num_buckets=2,
-        use_observations=False,
+    t2 = str(tmp_path / "t2")
+    q = run_streaming_apply(
+        spark, changes_path=log, table_path=t2,
+        checkpoint_path=str(tmp_path / "ckpt2"), num_buckets=2,
         expectations=[("small_doc", "n_tok < 40", "fail")],
     )
-    with pytest.raises(ExpectationFailed):
-        pipe_fail.run()
-    assert not pipe_fail.table.read().count()
+    with pytest.raises(StreamingQueryException, match="small_doc"):
+        q.awaitTermination(120)
+    assert not SnapTable(spark, t2).read().count()
+
+
+def test_streaming_lineage_counts_and_drift(spark, tmp_path):
+    """Each micro-batch's lineage line carries its observed counts and its
+    merge phases, and a batch with a new payload key records the evolved
+    column (the drift abort, evolve and redo run inside foreachBatch)."""
+    from embulk_filter_expand_json_spark.streaming.snaptable import SnapTable
+    from embulk_filter_expand_json_spark.streaming.stream_apply import (
+        run_streaming_apply,
+    )
+
+    log = str(tmp_path / "log")
+    rows = [
+        (0, 0, "I", json.dumps({"doc_id": "a", "tokens": [1], "n_tok": 1,
+                                "source": "s"})),
+        (1, 0, "I", json.dumps({"doc_id": "b", "tokens": [1], "n_tok": 1,
+                                "source": "s"})),
+        (2, 1, "U", json.dumps({"doc_id": "a", "tokens": [1, 2], "n_tok": 2,
+                                "source": "s", "lang": "en"})),
+        (3, 1, "I", json.dumps({"doc_id": "c", "tokens": [1], "n_tok": 1,
+                                "source": "s"})),
+        (4, 1, "D", json.dumps({"doc_id": "b"})),
+    ]
+    spark.createDataFrame(
+        rows, "log_offset long, epoch int, op string, payload string"
+    ).coalesce(1).write.partitionBy("epoch").parquet(log)
+    t = str(tmp_path / "t")
+    q = run_streaming_apply(
+        spark, changes_path=log, table_path=t,
+        checkpoint_path=str(tmp_path / "ckpt"), num_buckets=2,
+        max_files_per_trigger=1,
+    )
+    assert q.awaitTermination(120)
+    lines = lineage(t)
+    assert len(lines) == 2
+    assert sum(line["rows_in"] for line in lines) == len(rows)
+    assert [line["evolved_columns"] for line in lines
+            if line["evolved_columns"]] == [["lang"]]
+    for line in lines:
+        assert {"stage_sec", "publish_sec"} <= set(line["phases"])
+    got = {r["doc_id"]: r["lang"] for r in SnapTable(spark, t).read().collect()}
+    assert got == {"a": "en", "c": None}
 
 
 def test_expectation_validation(spark, tmp_path):

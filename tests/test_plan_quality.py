@@ -112,6 +112,28 @@ def test_keyjoin_broadcasts_winner_set(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
+def test_fan_out_small_scan_only_repartitions_undersized_inputs(spark):
+    """The CDC epoch's input fan-out is a structural no-op on a scan with
+    at least defaultParallelism splits and on one below ``min_bytes``;
+    otherwise it adds exactly one round-robin exchange."""
+    from embulk_filter_expand_json_spark.functions.fanout import (
+        fan_out_small_scan,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 1000, 1, cores)
+    assert fan_out_small_scan(wide) is wide
+    assert fan_out_small_scan(wide, min_bytes=1) is wide
+
+    narrow = spark.range(0, 1000, 1, 1)
+    assert fan_out_small_scan(narrow, min_bytes=1 << 40) is narrow
+    for min_bytes in (0, 1):
+        fanned = fan_out_small_scan(narrow, min_bytes=min_bytes)
+        assert plan_of(fanned).count("RoundRobinPartitioning") == 1
+        assert plan_of(fanned).count("Exchange") == 1
+        assert sorted(r.id for r in fanned.collect()) == list(range(1000))
+
+
 def test_simhash_token_hashing_is_jvm_side(spark):
     """Token hashing must run in Catalyst (xxhash64 under codegen BEFORE the
     Arrow boundary), not inside the Python worker — VERDICT r1 finding #1."""
