@@ -101,6 +101,11 @@ class EpochMetrics:
     rebucketed_to: Optional[int] = None
     evolved_columns: List[str] = field(default_factory=list)
     buckets_touched: int = 0
+    #: the committed merge's new manifest files and the bytes its stage job
+    #: and its rewrite wrote (0 when no bucket was rewritten)
+    files_written: int = 0
+    bytes_staged: int = 0
+    bytes_rewritten: int = 0
     #: the committed merge's per-phase wall seconds (a drift epoch: the redo)
     phases: dict = field(default_factory=dict)
     skipped: bool = False
@@ -380,6 +385,9 @@ class CdcPipeline:
             result = self._run_merge(changes, epoch, m, detect_drift=False)
         m.skipped = result.get("skipped", False)
         m.buckets_touched = result.get("buckets_touched", 0)
+        m.files_written = result.get("files_written", 0)
+        m.bytes_staged = result.get("bytes_staged", 0)
+        m.bytes_rewritten = result.get("bytes_rewritten", 0)
         m.phases = result.get("timings") or {}
         if self.auto_rebucket_bytes is not None and not m.skipped:
             man = self.table.manifest()

@@ -183,8 +183,9 @@ def replicate(
         return full_sync("bootstrap")
 
     try:
-        # probe retention BEFORE applying anything
-        src.read_changes(applied, src_version)
+        # the feed itself is the retention probe, built BEFORE applying
+        # anything
+        feed = src.read_changes(applied, src_version)
     except ValueError as e:
         if "not enabled" in str(e):
             raise  # replication needs the feed; don't mask a config error
@@ -200,7 +201,6 @@ def replicate(
         for e in latest_man.get("changes", [])
         if applied < e["version"] <= src_version
     ]
-    feed = src.read_changes(applied, src_version)
     applied_versions = []
     if coalesce_window and entries:
         from embulk_filter_expand_json_spark.operators.dedup_lww import (

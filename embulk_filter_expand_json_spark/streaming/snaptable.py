@@ -24,9 +24,11 @@ primitives — the protocol is what Iceberg itself does:
   ``mor_rewrite_ratio`` of the base bytes or ``max_delta_files_per_bucket``).
   Deferral caps write amplification at ~delta size (the Iceberg MoR trade);
   the per-bucket compaction trigger bounds read amplification, so no
-  separate maintenance scheduler is needed. Compaction never shuffles base
-  rows: delta winners resolve in a window over the (small) delta stack,
-  then broadcast-anti-join against base. Untouched buckets' files carry
+  separate maintenance scheduler is needed. Compaction resolves rows as a
+  read does (one resolve, ``_state_df``) and, while the delta stack fits
+  ``mor_read_broadcast_bytes``, never shuffles base rows: delta winners
+  resolve in a window over the (small) delta stack, then
+  broadcast-anti-join against base. Untouched buckets' files carry
   over to the new manifest verbatim — the file-level pruning that makes
   10^10-event replay tractable.
 - **Additive schema evolution**: the manifest owns the table schema; adding
@@ -627,7 +629,12 @@ class SnapTable:
         buckets that actually carry delta entries pay the window merge; the
         clean buckets' base files are unioned in pass-through with NO
         exchange over them — at the 100 TB target a trickle of deferred
-        epochs must not force a full-table key shuffle on every read."""
+        epochs must not force a full-table key shuffle on every read.
+
+        It is also merge's rewrite resolve: :meth:`_rewrite` passes the
+        uncommitted staged files as ``extra_deltas``, so one policy (the
+        ``mor_read_broadcast_bytes`` cap) decides for writes and reads
+        alike when base rows may be broadcast-anti-joined."""
         files = man["files"]
         if buckets is not None:
             bset = set(buckets)
@@ -661,15 +668,12 @@ class SnapTable:
         for p in parts[1:]:
             deltas_df = deltas_df.unionByName(p)
 
-        def _delta_bytes(f: dict) -> int:
-            if "bytes" in f:
-                return f["bytes"]
+        delta_total = 0
+        for f in delta_files:
             try:
-                return self.fs.size(self._mpath(f["path"]))
+                delta_total += self._file_bytes(f)
             except OSError:
-                return 1 << 40  # unknown size: assume too big to broadcast
-
-        delta_total = sum(_delta_bytes(f) for f in delta_files)
+                delta_total += 1 << 40  # unknown size: too big to broadcast
         bcast_cap = int(
             man.get("properties", {}).get(
                 "mor_read_broadcast_bytes", 64 * 1024 * 1024
@@ -1115,21 +1119,16 @@ class SnapTable:
         Returns a lineage dict; re-applying an epoch <=
         last_committed_epoch is a recorded no-op (exactly-once).
 
-        Two-phase staged-delta protocol (what Iceberg/Delta MERGE does):
-
-        1. **Stage** — ONE job computes the delta plan exactly once and
-           writes it hash-bucket-partitioned (``__bucket``/``__is_delete``
-           directories). Caller-attached ``observe`` aggregates ride this
-           job; the touched-bucket set and per-bucket delete presence come
-           from the staged directory listing — no pre-count, no key-scan,
-           no localCheckpoint job.
-        2. **Rewrite** — only for touched buckets that already have data
-           files: survivors (old ANTI-JOIN broadcast staged keys) UNION
-           staged upserts, rewritten per bucket. Touched buckets with NO
-           existing files skip this job entirely — their staged upsert
-           files are registered in the manifest directly (they are already
-           final-format: bucket-partitioned, key-sorted, schema columns
-           only). First-load epochs therefore commit in a single job.
+        The commit runs as named phases, each documented on its method
+        (the staged-delta protocol of Iceberg/Delta MERGE): :meth:`_stage`
+        → ``pre_commit`` → :meth:`_decide` → :meth:`_rewrite` →
+        :meth:`_publish_or_rebase`, which records the change entry
+        (:meth:`_record_changes`) in the manifest it publishes and then
+        deletes the staged files the rewrite consumed. The result's
+        ``timings`` holds each phase's wall seconds (``stage_sec``,
+        ``decide_sec``, ``rewrite_sec``, ``publish_sec``);
+        ``bytes_staged`` and ``bytes_rewritten`` the bytes the stage job
+        and the rewrite wrote.
 
         ``pre_commit``: optional callable invoked AFTER the stage job but
         BEFORE the rewrite/publish. Returning False aborts the commit (the
@@ -1159,10 +1158,8 @@ class SnapTable:
         state instead of restaging a stale snapshot's rows.
         """
         man = self.manifest()
-        base_version = man["version"]
         if _dml_op is not None:
-            # DML pins the watermark: publishing `epoch` back unchanged
-            # makes the `last_committed_epoch = epoch` write below a no-op
+            # DML pins the watermark: it commits at the current epoch
             epoch = man["last_committed_epoch"]
         elif epoch <= man["last_committed_epoch"]:
             return {
@@ -1170,10 +1167,100 @@ class SnapTable:
                 "skipped": True,
                 "reason": f"already committed (last={man['last_committed_epoch']})",
             }
+        props = {**man.get("properties", {}), **(extra_properties or {})}
+        if props.get("changelog") and int(props.get("changelog_keep", 64)) < 1:
+            # changes[-0:] would keep EVERYTHING — the opposite of the
+            # configured minimal retention; fail before writing anything
+            raise ValueError("changelog_keep must be >= 1")
+        timings: dict = {}
+        t = time.time()
+        commit_rel, staged = self._stage(man, deltas, delete_col)
+        timings["stage_sec"] = round(time.time() - t, 3)
+        t = time.time()
+        if pre_commit is not None and not pre_commit():
+            return {"epoch": epoch, "aborted": True, "orphaned_dir": commit_rel}
+        registered, rewrite_buckets, deferred_buckets = self._decide(man, staged)
+        timings["decide_sec"] = round(time.time() - t, 3)
+        t = time.time()
+        rw_rel = os.path.join(commit_rel, "rw")
+        rewritten = self._rewrite(man, rewrite_buckets, staged, rw_rel)
+        new_files = registered + rewritten
+        stats_cols = man.get("properties", {}).get("stats_columns")
+        if stats_cols:
+            self._attach_stats(new_files, list(stats_cols))
+        timings["rewrite_sec"] = round(time.time() - t, 3)
+        t = time.time()
+        affected = sorted({e["bucket"] for e in staged})
+        dropped = set(rewrite_buckets)
+        counts = {
+            "buckets_touched": len(affected),
+            "buckets_deferred": len(deferred_buckets),
+            "files_rewritten": sum(f["bucket"] in dropped for f in man["files"]),
+        }
+        # the touched-bucket set is what a LATER concurrent writer reads to
+        # prove its own commit bucket-disjoint from this one
+        summary = {
+            "op": _dml_op or "merge", "epoch": epoch, "buckets": affected, **counts
+        }
+        outcome, published = self._publish_or_rebase(
+            man,
+            summary,
+            commit_rel,
+            staged,
+            new_files,
+            rewrite_buckets=dropped,
+            conflict_buckets=set(affected) - set(deferred_buckets),
+            extra_properties=extra_properties,
+            is_dml=_dml_op is not None,
+        )
+        if outcome == "skipped":  # a crashed driver's twin committed it
+            return {
+                "epoch": epoch,
+                "skipped": True,
+                "reason": "epoch committed concurrently by another writer",
+            }
+        if outcome == "redo":
+            if max_commit_retries <= 0:
+                raise CommitConflict(
+                    f"merge of epoch {epoch} lost the commit race and "
+                    "cannot rebase (overlapping buckets, layout change, "
+                    "or retry budget exhausted)"
+                )
+            return self.merge(
+                deltas,
+                epoch,
+                delete_col=delete_col,
+                extra_properties=extra_properties,
+                pre_commit=pre_commit,
+                max_commit_retries=max_commit_retries - 1,
+            )
+        timings["publish_sec"] = round(time.time() - t, 3)
+        return {
+            "epoch": epoch,
+            "skipped": False,
+            "version": published["version"],
+            **counts,
+            "files_written": len(new_files),
+            "bytes_staged": sum(e["bytes"] for e in staged),
+            "bytes_rewritten": sum(f["bytes"] for f in rewritten),
+            "timings": timings,
+        }
+
+    def _stage(
+        self, man: dict, deltas: DataFrame, delete_col: Optional[str]
+    ) -> tuple:
+        """Write the change set in ONE job — the job whose scan carries the
+        caller's ``observe`` aggregates — into a new commit directory,
+        partitioned into ``__bucket``/``__is_delete`` directories (one
+        file per bucket and flag, key-sorted, schema columns only: already
+        in base-file format). The touched buckets and file sizes come from
+        the directory listing, so no pre-count, key-scan or checkpoint job
+        runs. Returns ``(commit_rel, staged)``: the commit directory and the
+        staged files as delta entries at the next commit sequence, in
+        bucket order, upserts before deletes."""
         key = man["key"]
         num_buckets = man["num_buckets"]
         schema = T.StructType.fromJson(man["schema"])
-
         # NULL delete flags coalesce to False: a NULL here would otherwise
         # land in a __HIVE_DEFAULT_PARTITION__ staging directory that the
         # false/true listing never registers — rows silently vanishing from
@@ -1188,96 +1275,62 @@ class SnapTable:
         for f in schema.fields:
             if f.name not in aligned.columns:
                 aligned = aligned.withColumn(f.name, F.lit(None).cast(f.dataType))
-        bucket_of = _bucket_of(F.col(key), num_buckets)
         aligned = aligned.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields],
             F.col("__is_delete"),
-            bucket_of.alias("__bucket"),
+            _bucket_of(F.col(key), num_buckets).alias("__bucket"),
         )
-
         # unique dir per attempt: a retry after crash-before-publish must not
         # collide with the orphaned files of the failed attempt
         commit_rel = os.path.join(
             "data", f"c{man['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         )
-        commit_dir = os.path.join(self.path, commit_rel)
         stage_rel = os.path.join(commit_rel, "delta")
-        stage_dir = os.path.join(self.path, stage_rel)
-
-        # ---- phase 1: stage (the ONE job whose scan carries the observes).
-        # Hash-partitioned on __bucket so each bucket lands wholly in one
-        # task (one file per bucket/flag). Bounded bucket counts pin the
-        # partition count to num_buckets explicitly — AQE's post-shuffle
-        # re-plan costs ~0.2 s of fixed latency per job (measured), pure
-        # waste in a per-epoch replay loop. Above the threshold (thousands
-        # of buckets, where a trickle epoch touches few and empty tasks
-        # would dominate) AQE sizes the partition count to the delta.
-        _phase_t = time.time()
-        _timings: dict = {}
-        if num_buckets <= _EXPLICIT_BUCKET_TASKS:
-            staged_part = aligned.repartition(num_buckets, "__bucket")
-        else:
-            staged_part = aligned.repartition("__bucket")
         (
-            staged_part
+            self._by_bucket(aligned, num_buckets, num_buckets)
             .sortWithinPartitions("__bucket", "__is_delete", key)
             .write.mode("errorifexists")
             .options(**self._bloom_options(man))
             .partitionBy("__bucket", "__is_delete")
-            .parquet(stage_dir)
+            .parquet(os.path.join(self.path, stage_rel))
         )
-
-        _timings["stage_sec"] = round(time.time() - _phase_t, 3)
-        _phase_t = time.time()
-
-        # touched buckets + staged files (with sizes) from ONE recursive
-        # listing (manifest-sized; a single paginated LIST per prefix on an
-        # object store instead of a request per directory level, and sizes
-        # ride the listing — no per-file stat round trips)
-        staged: dict = {}  # bucket -> {False: [(rel, bytes)], True: [...]}
-        for rel_in_stage, nbytes in self.fs.list_files_recursive(
-            self._mpath(stage_rel)
-        ):
-            parts_path = rel_in_stage.split("/")
-            if not parts_path[0].startswith("__bucket="):
-                continue  # Spark's _SUCCESS marker etc.
-            b = int(parts_path[0].split("=", 1)[1])
-            staged.setdefault(b, {False: [], True: []})
-            if len(parts_path) < 2 or not parts_path[-1].endswith(".parquet"):
-                continue
-            sub = parts_path[1]
-            if sub not in ("__is_delete=false", "__is_delete=true"):
+        staged = []
+        for e in self._list_bucket_files(stage_rel):
+            flag_dir = e["path"].split("/")[-2]
+            if flag_dir not in ("__is_delete=false", "__is_delete=true"):
                 raise ValueError(
-                    f"staged partition dir {sub!r} in bucket {b}: the "
-                    "delete flag must evaluate to true/false (never NULL) — "
-                    "registering it would silently drop rows"
+                    f"staged partition dir {flag_dir!r} in bucket "
+                    f"{e['bucket']}: the delete flag must evaluate to "
+                    "true/false (never NULL) — registering it would silently "
+                    "drop rows"
                 )
-            flag = sub == "__is_delete=true"
-            staged[b][flag].append(
-                (posixpath.join(stage_rel, rel_in_stage), nbytes)
+            staged.append(
+                {
+                    **e,
+                    "kind": "delta",
+                    "seq": man["version"] + 1,
+                    "delete": flag_dir == "__is_delete=true",
+                }
             )
-        affected = sorted(staged)
+        return commit_rel, sorted(staged, key=lambda e: (e["bucket"], e["delete"]))
 
-        if pre_commit is not None and not pre_commit():
-            return {
-                "epoch": epoch,
-                "aborted": True,
-                "orphaned_dir": commit_rel,
-            }
+    def _decide(self, man: dict, staged: List[dict]) -> tuple:
+        """Merge-on-read decision per touched bucket, from the manifest's
+        recorded file sizes (no job):
 
-        base_by_bucket: dict = {}
-        deltas_by_bucket: dict = {}
-        for f in man["files"]:
-            if f.get("kind") == "delta":
-                deltas_by_bucket.setdefault(f["bucket"], []).append(f)
-            else:
-                base_by_bucket.setdefault(f["bucket"], []).append(f)
+        - fresh bucket (no base, no deltas): its staged upserts ARE the
+          base and are registered as is, so a first load commits in the
+          stage job alone; its staged deletes match nothing;
+        - small delta vs the bucket's base: DEFER — register the staged
+          files as delta entries; readers merge them (write amplification
+          ~delta-sized, the Iceberg MoR trade);
+        - delta stack too big (bytes ratio or file count), or base below
+          the MoR floor: REWRITE the bucket now, folding base + deltas +
+          this delta into new base files (bounds read amplification; this
+          is incremental compaction, no separate maintenance job needed).
 
-        def _bytes(entry: dict) -> int:
-            if "bytes" in entry:
-                return entry["bytes"]
-            return self.fs.size(self._mpath(entry["path"]))
-
+        Returns ``(registered, rewrite_buckets, deferred_buckets)``, where
+        ``registered`` holds the fresh and deferred buckets' new entries."""
         props = man.get("properties", {})
         mor_ratio = float(props.get("mor_rewrite_ratio", 0.2))
         max_delta = int(props.get("max_delta_files_per_bucket", 8))
@@ -1289,318 +1342,138 @@ class SnapTable:
         # that rewriting it dominates; default 64 MiB per bucket (the design
         # target is 0.25-1 GB buckets, safely above the floor).
         mor_floor = int(props.get("min_mor_base_bytes", 64 * 1024 * 1024))
-        new_seq = man["version"] + 1
-
-        # ---- phase 2 decision, per touched bucket (merge-on-read):
-        # - fresh bucket (no base, no deltas): staged upserts ARE the base
-        # - small delta vs the bucket's base: DEFER — register the staged
-        #   files as delta entries; readers merge them (one job per epoch,
-        #   write amplification ~delta-sized, the Iceberg MoR trade)
-        # - delta stack too big (bytes ratio or file count): COMPACT the
-        #   bucket now — fold base + deltas + this delta into new base files
-        #   (bounds read amplification; this is incremental compaction, no
-        #   separate maintenance job needed)
-        new_files: List[dict] = []
+        history: dict = {}
+        for f in man["files"]:
+            history.setdefault(f["bucket"], []).append(f)
+        touched: dict = {}
+        for e in staged:
+            touched.setdefault(e["bucket"], []).append(e)
+        registered: List[dict] = []
         rewrite_buckets: List[int] = []
         deferred_buckets: List[int] = []
-        for b in affected:
-            has_history = b in base_by_bucket or b in deltas_by_bucket
-            st_up, st_del = staged[b][False], staged[b][True]
-            if not has_history:
-                new_files.extend(
-                    {"path": rel, "bucket": b, "bytes": sz} for rel, sz in st_up
+        for b, entries in touched.items():
+            if b not in history:
+                registered.extend(
+                    {"path": e["path"], "bucket": b, "bytes": e["bytes"]}
+                    for e in entries
+                    if not e["delete"]
                 )
                 continue
-            staged_bytes = sum(sz for _, sz in st_up + st_del)
-            delta_bytes = staged_bytes + sum(
-                _bytes(f) for f in deltas_by_bucket.get(b, [])
+            base_bytes = sum(
+                self._file_bytes(f) for f in history[b] if f.get("kind") != "delta"
             )
-            base_bytes = sum(_bytes(f) for f in base_by_bucket.get(b, []))
-            n_delta_files = (
-                len(deltas_by_bucket.get(b, [])) + len(st_up) + len(st_del)
-            )
+            stack = [f for f in history[b] if f.get("kind") == "delta"] + entries
             if (
                 base_bytes < mor_floor
-                or delta_bytes >= mor_ratio * max(base_bytes, 1)
-                or n_delta_files > max_delta
+                or sum(self._file_bytes(f) for f in stack)
+                >= mor_ratio * max(base_bytes, 1)
+                or len(stack) > max_delta
             ):
                 rewrite_buckets.append(b)
             else:
                 deferred_buckets.append(b)
-                for is_del, fs in ((False, st_up), (True, st_del)):
-                    new_files.extend(
-                        {
-                            "path": rel,
-                            "bucket": b,
-                            "bytes": sz,
-                            "kind": "delta",
-                            "seq": new_seq,
-                            "delete": is_del,
-                        }
-                        for rel, sz in fs
-                    )
+                registered.extend(entries)
+        return registered, rewrite_buckets, deferred_buckets
 
-        dropped = set(rewrite_buckets)
-        keep_files = [f for f in man["files"] if f["bucket"] not in dropped]
+    def _rewrite(
+        self, man: dict, buckets: List[int], staged: List[dict], out_rel: str
+    ) -> List[dict]:
+        """Fold ``buckets``' base files and delta stacks in manifest ``man``,
+        plus the uncommitted delta entries ``staged`` (one row per key per
+        ``seq``; any files in the table's layout, whoever wrote them), into
+        new base files under ``out_rel``, in one write job. Entries of other
+        buckets in ``staged`` are ignored. Returns the new files' entries.
 
-        _timings["decide_sec"] = round(time.time() - _phase_t, 3)
-        _phase_t = time.time()
+        The new state is :meth:`_state_df`'s resolve with ``staged`` as
+        extra deltas, so a rewrite and a read resolve rows one way; while
+        the delta stack fits ``mor_read_broadcast_bytes``, winners
+        broadcast-anti-join the base and no base row is shuffled."""
+        if not buckets:
+            return []
+        bset = set(buckets)
+        key = man["key"]
+        num_buckets = man["num_buckets"]
+        new_state = self._state_df(
+            man,
+            T.StructType.fromJson(man["schema"]),
+            buckets=buckets,
+            extra_deltas=[e for e in staged if e["bucket"] in bset],
+        ).withColumn("__bucket", _bucket_of(F.col(key), num_buckets))
+        # a task whose hash partition holds two rewrite buckets writes two files
+        (
+            self._by_bucket(new_state, num_buckets, min(num_buckets, len(bset)))
+            .sortWithinPartitions(key)
+            .write.mode("errorifexists")
+            .options(**self._bloom_options(man))
+            .partitionBy("__bucket")
+            .parquet(os.path.join(self.path, out_rel))
+        )
+        return self._list_bucket_files(out_rel)
 
-        # ---- phase 3: compaction-rewrite of the chosen buckets (one job).
-        # Delta rows (existing delta files + this epoch's staged files) are
-        # small — resolve last-writer-wins among them with a window, then
-        # broadcast-anti-join against base so base rows are NEVER shuffled.
-        files_rewritten = 0
-        if rewrite_buckets:
-            files_rewritten = sum(
-                len(base_by_bucket.get(b, [])) + len(deltas_by_bucket.get(b, []))
-                for b in rewrite_buckets
+    def _record_changes(self, man: dict, epoch: int, staged: List[dict]) -> None:
+        """Change data feed (Delta CDF / Iceberg changelog analog): when the
+        ``changelog`` property is on, append the commit's change entry to
+        ``man`` (the manifest about to publish as ``man["version"]``) and
+        trim the feed to the last ``changelog_keep`` entries.
+
+        The staged files ARE the commit's row-level change set — the
+        LWW-deduped upserts and deletes, one row per key — so the feed
+        costs ZERO extra writes: the manifest keeps referencing them even
+        when the rewrite consumed them into new base files. Consumers tail
+        the table with read_changes(since_version), a pure file union."""
+        props = man.get("properties", {})
+        if not props.get("changelog"):
+            return
+        files = [
+            {k: e[k] for k in ("path", "bucket", "bytes", "delete")} for e in staged
+        ]
+        version = man["version"]
+        # the feed is complete for since_version >= the version BEFORE the
+        # first recorded entry
+        man.setdefault("changes_valid_from", version - 1)
+        changes = man.get("changes", []) + [
+            {"version": version, "epoch": epoch, "files": files}
+        ]
+        keep_n = int(props.get("changelog_keep", 64))
+        if len(changes) > keep_n:
+            # trimmed entries' files stay on disk until GC decides — older
+            # manifests may still reference them as base/delta
+            changes = changes[-keep_n:]
+            man["changes_valid_from"] = max(
+                man["changes_valid_from"], changes[0]["version"] - 1
             )
-            base = self._read_files(
-                [f for b in rewrite_buckets for f in base_by_bucket.get(b, [])],
-                schema,
-            )
-            delta_entries = [
-                f for b in rewrite_buckets for f in deltas_by_bucket.get(b, [])
-            ] + [
-                {"path": rel, "bucket": b, "seq": new_seq, "delete": is_del}
-                for b in rewrite_buckets
-                for is_del, fs in ((False, staged[b][False]), (True, staged[b][True]))
-                for rel, _sz in fs
-            ]
-            groups: dict = {}
-            for f in delta_entries:
-                groups.setdefault((f["seq"], bool(f["delete"])), []).append(f)
-            parts = []
-            for (seq, is_del), fs in sorted(groups.items()):
-                parts.append(
-                    self._read_files(fs, schema)
-                    .withColumn("__seq", F.lit(seq).cast("long"))
-                    .withColumn("__mor_del", F.lit(is_del))
-                )
-            deltas_df = parts[0]
-            for p in parts[1:]:
-                deltas_df = deltas_df.unionByName(p)
-            if len({f["seq"] for f in delta_entries}) == 1:
-                # plain-CoW fast path (every rewrite bucket has NO prior
-                # delta stack — the only delta is this epoch's staged files,
-                # already one-row-per-key from lww_dedup): the staged rows
-                # ARE the winners, no window shuffle over the delta needed.
-                # This is the whole per-epoch path below the MoR floor.
-                winners = deltas_df.drop("__seq")
-            else:
-                from pyspark.sql import Window
+        man["changes"] = changes
 
-                # tie-break desc(__mor_del) as in _state_df: deterministic
-                # even if a caller violates the one-row-per-key contract
-                w = Window.partitionBy(key).orderBy(
-                    F.desc("__seq"), F.desc("__mor_del")
-                )
-                winners = (
-                    deltas_df.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn", "__seq")
-                )
-            # no distinct: winners are unique per key (window or contract),
-            # and anti-join ignores dup build keys — skipping it removes a
-            # key-hash exchange from every rewrite epoch. eqNullSafe keeps
-            # NULL one logical key, consistent with the window resolve.
-            survivors = base.join(
-                F.broadcast(winners.select(F.col(key).alias("__wk"))),
-                on=F.col(key).eqNullSafe(F.col("__wk")),
-                how="left_anti",
-            ).withColumn("__mor_del", F.lit(False))
-            new_state = (
-                survivors.unionByName(winners)
-                .filter(~F.col("__mor_del"))
-                .drop("__mor_del")
-                .withColumn("__bucket", bucket_of)
-            )
-            rw_rel = os.path.join(commit_rel, "rw")
-            rw_dir = os.path.join(self.path, rw_rel)
-            # same explicit-count rule as the stage write (hash collisions
-            # across rewrite buckets just mean a task writes two files)
-            if num_buckets <= _EXPLICIT_BUCKET_TASKS:
-                rw_part = new_state.repartition(
-                    min(num_buckets, max(len(rewrite_buckets), 1)), "__bucket"
-                )
-            else:
-                rw_part = new_state.repartition("__bucket")
-            (
-                rw_part
-                .sortWithinPartitions(key)
-                .write.mode("errorifexists")
-                .options(**self._bloom_options(man))
-                .partitionBy("__bucket")
-                .parquet(rw_dir)
-            )
-            new_files.extend(
-                {
-                    "path": posixpath.join(rw_rel, rel),
-                    "bucket": int(rel.split("/", 1)[0].split("=", 1)[1]),
-                    "bytes": nbytes,
-                }
-                for rel, nbytes in self.fs.list_files_recursive(
-                    self._mpath(rw_rel)
-                )
-                if rel.split("/", 1)[0].startswith("__bucket=")
-                and rel.endswith(".parquet")
-            )
+    def _list_bucket_files(self, rel: str) -> List[dict]:
+        """Entries (path, bucket, bytes) of the parquet files that a write
+        partitioned by ``__bucket`` left under ``rel``, from ONE recursive
+        listing: a single paginated LIST per prefix on an object store, with
+        the sizes riding it (no per-file stat round trips)."""
+        return [
+            {
+                "path": posixpath.join(rel, name),
+                "bucket": int(name.split("/", 1)[0].split("=", 1)[1]),
+                "bytes": nbytes,
+            }
+            for name, nbytes in self.fs.list_files_recursive(self._mpath(rel))
+            if name.startswith("__bucket=") and name.endswith(".parquet")
+        ]
 
-        stats_cols = props.get("stats_columns")
-        if stats_cols:
-            self._attach_stats(new_files, list(stats_cols))
+    def _file_bytes(self, entry: dict) -> int:
+        """A file entry's size: the manifest's recorded bytes, else a stat
+        (entries written before sizes were recorded); OSError if gone."""
+        if "bytes" in entry:
+            return entry["bytes"]
+        return self.fs.size(self._mpath(entry["path"]))
 
-        man["files"] = keep_files + new_files
-        man["last_committed_epoch"] = epoch
-        man["version"] += 1
-        if extra_properties:
-            man["properties"].update(extra_properties)
-
-        # ---- change data feed (Delta CDF / Iceberg changelog analog).
-        # The staged files ARE the commit's row-level change set — the
-        # LWW-deduped upserts and deletes of this epoch, one row per key —
-        # so enabling the feed costs ZERO extra writes: the manifest just
-        # keeps referencing them after the commit (even when the rewrite
-        # path consumed them into new base files). Downstream incremental
-        # consumers tail the table with read_changes(since_version) — a
-        # pure file union, no shuffle, no diffing of snapshots.
-        change_files: List[dict] = []
-        if props.get("changelog"):
-            man.setdefault("changes", [])
-            # feed is complete for since_version >= the version BEFORE the
-            # first recorded entry (new_seq - 1 at first enablement)
-            man.setdefault("changes_valid_from", new_seq - 1)
-            for b in affected:
-                for is_del, fs in ((False, staged[b][False]), (True, staged[b][True])):
-                    change_files.extend(
-                        {"path": rel, "bucket": b, "bytes": sz, "delete": is_del}
-                        for rel, sz in fs
-                    )
-            man["changes"].append(
-                {"version": new_seq, "epoch": epoch, "files": change_files}
-            )
-            keep_n = int(props.get("changelog_keep", 64))
-            if keep_n < 1:
-                # changes[-0:] would keep EVERYTHING — the opposite of the
-                # configured minimal retention; fail loudly instead
-                raise ValueError("changelog_keep must be >= 1")
-            if len(man["changes"]) > keep_n:
-                trimmed = man["changes"][:-keep_n]
-                man["changes"] = man["changes"][-keep_n:]
-                # trimmed entries' files stay on disk until GC decides —
-                # older manifests may still reference them as base/delta
-                man["changes_valid_from"] = max(
-                    man.get("changes_valid_from", 0),
-                    man["changes"][0]["version"] - 1,
-                )
-                del trimmed
-
-        _timings["rewrite_sec"] = round(time.time() - _phase_t, 3)
-        _phase_t = time.time()
-
-        man["summary"] = {
-            # DML commits validate exactly like merges in a rival writer's
-            # rebase (bucket-disjointness is the whole test), but history()
-            # should show what the commit WAS
-            "op": _dml_op or "merge",
-            "epoch": epoch,
-            # the full touched-bucket set: what a LATER concurrent writer
-            # reads to prove its own commit is bucket-disjoint from this
-            # one (manifests already carry per-file entries for these
-            # buckets, so the list adds no asymptotic metadata weight)
-            "buckets": affected,
-            "buckets_touched": len(affected),
-            "buckets_deferred": len(deferred_buckets),
-            "files_rewritten": files_rewritten,
-        }
-        try:
-            version = self._publish(man)
-        except CommitConflict:
-            # Lost the publish race. Deferred-bucket entries are pure
-            # appends at the top commit sequence (LWW-safe over ANY
-            # intervening state), so only rewrite + fresh buckets can
-            # genuinely conflict with another writer's data.
-            outcome, version = self._rebase_merge(
-                base_version=base_version,
-                epoch=epoch,
-                conflict_buckets=set(affected) - set(deferred_buckets),
-                rewrite_buckets=set(rewrite_buckets),
-                new_files=new_files,
-                change_files=change_files,
-                old_new_seq=new_seq,
-                summary=man["summary"],
-                extra_properties=extra_properties,
-                num_buckets=num_buckets,
-                key=key,
-                is_dml=_dml_op is not None,
-            )
-            if outcome == "skipped":
-                # another writer already committed this epoch (crashed
-                # driver's twin): exactly-once skip; this attempt's files
-                # are dead now, not at the next orphan sweep
-                self._discard_commit_dir(commit_rel)
-                return {
-                    "epoch": epoch,
-                    "skipped": True,
-                    "reason": "epoch committed concurrently by another writer",
-                }
-            if outcome == "redo":
-                self._discard_commit_dir(commit_rel)
-                if _dml_op is not None:
-                    # the staged rows came from a predicate over a now-stale
-                    # snapshot — restaging them verbatim could delete/update
-                    # rows a rival writer just changed out from under the
-                    # predicate. The DML wrapper recomputes from fresh state.
-                    raise CommitConflict(
-                        f"{_dml_op} lost the commit race to an overlapping "
-                        "writer; recompute the predicate against fresh state"
-                    )
-                if max_commit_retries <= 0:
-                    raise CommitConflict(
-                        f"merge of epoch {epoch} lost the commit race and "
-                        "cannot rebase (overlapping buckets, layout change, "
-                        "or retry budget exhausted)"
-                    )
-                return self.merge(
-                    deltas,
-                    epoch,
-                    delete_col=delete_col,
-                    extra_properties=extra_properties,
-                    pre_commit=pre_commit,
-                    max_commit_retries=max_commit_retries - 1,
-                )
-        # self-cleanup: staged files CONSUMED by the rewrite (not registered
-        # in the manifest) are dead the moment the commit publishes — delete
-        # them here instead of leaving every rewrite epoch's stage dir as
-        # orphans for a later sweep. Crash before this point leaves them for
-        # remove_orphans; crash before publish leaves the whole attempt.
-        # Change-feed entries keep their files referenced (and alive).
-        registered = {f["path"] for f in new_files}
-        registered.update(f["path"] for f in change_files)
-        for groups_by_flag in staged.values():
-            for flagged in groups_by_flag.values():
-                for rel, _sz in flagged:
-                    if rel not in registered:
-                        self.fs.delete(self._mpath(rel))
-        # prune only THIS commit's directory tree — the one place the
-        # cleanup above can create empty dirs. A full data_dir walk here
-        # would cost O(total table files) of metadata I/O on EVERY epoch
-        # of a replay (GC ops still do the full walk, where it belongs).
-        self._prune_empty_dirs(self._mpath(commit_rel))
-        _timings["publish_sec"] = round(time.time() - _phase_t, 3)
-        return {
-            "epoch": epoch,
-            "skipped": False,
-            "version": version,
-            "buckets_touched": len(affected),
-            "buckets_deferred": len(deferred_buckets),
-            "files_rewritten": files_rewritten,
-            "files_written": len(new_files),
-            # phase wall-clock: where an epoch's constant costs live
-            # (stage job / MoR decision metadata / rewrite job / publish+GC)
-            "timings": _timings,
-        }
+    @staticmethod
+    def _by_bucket(df: DataFrame, num_buckets: int, parts: int) -> DataFrame:
+        """Hash-partition a merge write on ``__bucket`` so each bucket lands
+        wholly in one task: into ``parts`` partitions up to
+        ``_EXPLICIT_BUCKET_TASKS`` buckets, else as many as AQE picks."""
+        if num_buckets <= _EXPLICIT_BUCKET_TASKS:
+            return df.repartition(parts, "__bucket")
+        return df.repartition("__bucket")
 
     # ------------------------------------------------------ row-level DML
     def delete_where(self, condition, max_commit_retries: int = 10) -> dict:
@@ -1876,28 +1749,100 @@ class SnapTable:
         ) from last_err
 
     # ------------------------------------------------- concurrency control
-    def _rebase_merge(
+    def _publish_or_rebase(
         self,
-        base_version: int,
-        epoch: int,
-        conflict_buckets: set,
-        rewrite_buckets: set,
-        new_files: List[dict],
-        change_files: List[dict],
-        old_new_seq: int,
+        man: dict,
         summary: dict,
+        commit_rel: str,
+        staged: List[dict],
+        new_files: List[dict],
+        rewrite_buckets: set,
+        conflict_buckets: set,
         extra_properties: Optional[dict],
-        num_buckets: int,
-        key: str,
+        is_dml: bool,
         max_attempts: int = 10,
-        is_dml: bool = False,
     ) -> tuple:
-        """Resolve a lost merge publish race without re-running any Spark
-        job, when safe. Returns ``(outcome, version)`` with outcome one of
-        ``"committed"`` / ``"skipped"`` / ``"redo"``.
+        """Publish merge's commit as the version after ``man``, the manifest
+        it was computed from: drop the files of ``rewrite_buckets``, add
+        ``new_files``, apply the epoch and ``extra_properties``, and record
+        the change entry (:meth:`_record_changes`). Once published, staged
+        files the manifest does not reference (the rewrite consumed them,
+        no change feed keeps them) are dead and deleted now, not left to
+        remove_orphans; a crash before that leaves them to it.
 
-        Validation walks every intervening commit (base_version, cur] and
-        admits the rebase only if ALL of them are provably compatible:
+        A lost publish race is resolved without re-running any Spark job
+        when :meth:`_rebase_allowed`: the same commit is applied onto the
+        CURRENT manifest, its deferred delta entries taking the new commit
+        sequence so LWW order matches commit order. An equal-or-higher
+        committed epoch resolves as the exactly-once skip (merge()'s entry
+        check). Otherwise the attempt's directory ``commit_rel`` is deleted
+        and the merge must be redone; a DML commit raises
+        :class:`CommitConflict` instead, since its rows came from a
+        predicate over a now-stale snapshot.
+
+        Returns ``(outcome, manifest)``: ``"committed"`` with the published
+        manifest, or ``"skipped"`` / ``"redo"`` with None."""
+        epoch = summary["epoch"]
+        outcome = "redo"
+        cur = man
+        for attempt in range(max_attempts + 1):
+            if attempt:  # lost the race: validate against the new manifest
+                cur = self.manifest()
+                # a DML commit's epoch IS the current watermark (it advances
+                # nothing), so the exactly-once skip does not apply to it
+                if not is_dml and cur["last_committed_epoch"] >= epoch:
+                    outcome = "skipped"
+                    break
+                if not self._rebase_allowed(man, cur, conflict_buckets):
+                    break
+            nxt = dict(cur)
+            nxt["version"] = cur["version"] + 1
+            nxt["files"] = [
+                f for f in cur["files"] if f["bucket"] not in rewrite_buckets
+            ] + [
+                {**f, "seq": nxt["version"]} if f.get("kind") == "delta" else f
+                for f in new_files
+            ]
+            # DML keeps cur's watermark: a rival CDC merge may have advanced
+            # it past this DML's (pinned, older) epoch
+            if not is_dml:
+                nxt["last_committed_epoch"] = epoch
+            nxt["properties"] = {
+                **cur.get("properties", {}),
+                **(extra_properties or {}),
+            }
+            self._record_changes(nxt, epoch, staged)
+            nxt["summary"] = (
+                {**summary, "rebased_from_version": man["version"]}
+                if attempt
+                else summary
+            )
+            try:
+                self._publish(nxt)
+            except CommitConflict:
+                continue  # another writer landed first: validate against it
+            live = self._referenced_paths(nxt)
+            for e in staged:
+                if e["path"] not in live:
+                    self.fs.delete(self._mpath(e["path"]))
+            # prune only THIS commit's tree: a data_dir walk would cost
+            # O(table files) on every epoch
+            self._prune_empty_dirs(self._mpath(commit_rel))
+            return "committed", nxt
+        self._discard_commit_dir(commit_rel)  # dead now, not at a sweep
+        if outcome == "redo" and is_dml:
+            raise CommitConflict(
+                f"{summary['op']} lost the commit race to an overlapping "
+                "writer; recompute the predicate against fresh state"
+            )
+        return outcome, None
+
+    def _rebase_allowed(
+        self, man: dict, cur: dict, conflict_buckets: set
+    ) -> bool:
+        """Whether a merge computed from manifest ``man`` may be re-applied
+        onto the newer ``cur``: the layout (key, bucket count) is unchanged
+        and EVERY intervening commit (man, cur] is provably compatible:
 
         - another ``merge``: its recorded bucket set must be disjoint from
           this merge's ``conflict_buckets`` (rewrite + fresh buckets —
@@ -1905,7 +1850,7 @@ class SnapTable:
           manifest). Deferred-bucket overlap is always safe: those entries
           append at the top commit sequence, so LWW resolves them last
           over ANY intervening state. A pre-concurrency manifest without
-          the ``buckets`` summary cannot prove disjointness → redo.
+          the ``buckets`` summary cannot prove disjointness.
         - ``compact``: state-preserving by definition — it replaced files
           in our rewrite buckets, but with the SAME logical rows our
           rewrite already folded in, so dropping its output for those
@@ -1913,89 +1858,22 @@ class SnapTable:
         - ``evolve-add-columns``: additive; the rebase adopts the evolved
           schema and our narrower files null-fill on read.
         - ``rebucket`` / unknown ops / an expired (unreadable) manifest:
-          cannot validate → redo.
-
-        Epoch ordering is re-checked against the CURRENT manifest: an
-        equal-or-higher committed epoch resolves as the exactly-once skip
-        (same contract as merge()'s entry check).
-        """
-        for _ in range(max_attempts):
-            cur = self.manifest()
-            # a DML commit's epoch IS the current watermark (it advances
-            # nothing), so the exactly-once skip check — "someone already
-            # committed this source epoch" — does not apply to it
-            if not is_dml and cur["last_committed_epoch"] >= epoch:
-                return "skipped", None
-            if cur["num_buckets"] != num_buckets or cur["key"] != key:
-                return "redo", None
-            compatible = True
-            for v in range(base_version + 1, cur["version"] + 1):
-                try:
-                    mid = self.manifest(v)
-                except FileNotFoundError:
-                    compatible = False  # expired mid-race: can't validate
-                    break
-                op = (mid.get("summary") or {}).get("op")
-                if op in ("merge", "delete-where", "update-where", "merge-into"):
-                    touched = set(mid["summary"].get("buckets") or ())
-                    if not touched or (touched & conflict_buckets):
-                        compatible = False
-                        break
-                elif op in ("compact", "evolve-add-columns"):
-                    continue
-                else:
-                    compatible = False
-                    break
-            if not compatible:
-                return "redo", None
-
-            new_seq = cur["version"] + 1
-            # deferred delta entries carry the commit sequence they were
-            # minted under — remap to the rebased sequence so LWW ordering
-            # matches commit order (copies: new_files is also the caller's
-            # post-publish cleanup whitelist)
-            remapped = []
-            for f in new_files:
-                if f.get("kind") == "delta" and f.get("seq") == old_new_seq:
-                    f = {**f, "seq": new_seq}
-                remapped.append(f)
-            man2 = dict(cur)
-            man2["files"] = [
-                f for f in cur["files"] if f["bucket"] not in rewrite_buckets
-            ] + remapped
-            man2["version"] = new_seq
-            if not is_dml:
-                man2["last_committed_epoch"] = epoch
-            # DML: keep cur's watermark — a rival CDC merge may have
-            # advanced it past this DML's (pinned, older) epoch, and
-            # writing ours back would regress source progress
-            if extra_properties:
-                man2["properties"] = {
-                    **man2.get("properties", {}),
-                    **extra_properties,
-                }
-            props = man2.get("properties", {})
-            if props.get("changelog"):
-                man2.setdefault("changes_valid_from", new_seq - 1)
-                changes = list(man2.get("changes", ())) + [
-                    {"version": new_seq, "epoch": epoch, "files": change_files}
-                ]
-                keep_n = int(props.get("changelog_keep", 64))
-                if keep_n < 1:
-                    raise ValueError("changelog_keep must be >= 1")
-                if len(changes) > keep_n:
-                    changes = changes[-keep_n:]
-                    man2["changes_valid_from"] = max(
-                        man2.get("changes_valid_from", 0),
-                        changes[0]["version"] - 1,
-                    )
-                man2["changes"] = changes
-            man2["summary"] = {**summary, "rebased_from_version": base_version}
+          cannot be validated."""
+        if cur["num_buckets"] != man["num_buckets"] or cur["key"] != man["key"]:
+            return False
+        for v in range(man["version"] + 1, cur["version"] + 1):
             try:
-                return "committed", self._publish(man2)
-            except CommitConflict:
-                continue  # yet another writer landed: re-validate vs newer
-        return "redo", None
+                summary = self.manifest(v).get("summary") or {}
+            except FileNotFoundError:
+                return False  # expired mid-race
+            op = summary.get("op")
+            if op in ("merge", "delete-where", "update-where", "merge-into"):
+                touched = set(summary.get("buckets") or ())
+                if not touched or touched & conflict_buckets:
+                    return False
+            elif op not in ("compact", "evolve-add-columns"):
+                return False
+        return True
 
     def _discard_commit_dir(self, commit_rel: str) -> None:
         """Delete an unpublished commit attempt's entire staging subtree —
@@ -2079,18 +1957,7 @@ class SnapTable:
             .partitionBy("__bucket")
             .parquet(commit_dir)
         )
-        entries = [
-            {
-                "path": posixpath.join(commit_rel, rel),
-                "bucket": int(rel.split("/", 1)[0].split("=", 1)[1]),
-                "bytes": nbytes,
-            }
-            for rel, nbytes in self.fs.list_files_recursive(
-                self._mpath(commit_rel)
-            )
-            if rel.split("/", 1)[0].startswith("__bucket=")
-            and rel.endswith(".parquet")
-        ]
+        entries = self._list_bucket_files(commit_rel)
         stats_cols = man.get("properties", {}).get("stats_columns")
         if stats_cols:
             self._attach_stats(entries, list(stats_cols))

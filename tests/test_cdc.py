@@ -259,6 +259,34 @@ def test_resume_from_checkpoint(spark, tmp_path, changes_path):
             assert {"stage_sec", "publish_sec"} <= set(l["phases"]), l
 
 
+def test_lineage_records_staged_and_rewritten_bytes(
+    spark, tmp_path, changes_path
+):
+    """Each committed lineage line says what its commit wrote: bytes_staged
+    is the commit's change set (its change-feed entry's file bytes, the
+    drift redo's and not the aborted attempt's), bytes_rewritten is 0 on
+    the first load (fresh buckets register their staged files) and > 0
+    once the next epoch rewrites existing buckets."""
+    pipe = CdcPipeline(
+        spark, changes_path, str(tmp_path / "t"), num_buckets=4, changelog=True
+    )
+    pipe.run(max_epochs=3)
+    with open(pipe.offsets_log) as f:
+        lines = [json.loads(line) for line in f]
+    assert [l["epoch"] for l in lines] == [0, 1, 2]
+    assert not any(l["skipped"] for l in lines)
+    assert any(l["evolved_columns"] for l in lines)  # a drift redo ran
+    change_bytes = {
+        c["epoch"]: sum(f["bytes"] for f in c["files"])
+        for c in pipe.table.manifest()["changes"]
+    }
+    for l in lines:
+        assert l["bytes_staged"] == change_bytes[l["epoch"]] > 0, l
+        assert l["files_written"] > 0, l
+    assert lines[0]["bytes_rewritten"] == 0
+    assert all(l["bytes_rewritten"] > 0 for l in lines[1:]), lines
+
+
 def test_replay_idempotent_epoch_skip(spark, tmp_path, changes_path):
     p = CdcPipeline(spark, changes_path, str(tmp_path / "tbl3"), num_buckets=4)
     p.run(max_epochs=1)

@@ -149,6 +149,9 @@ def test_changelog_keep_zero_rejected(spark, tmp_path):
             epoch=0,
             delete_col="is_del",
         )
+    # rejected before the stage job: no commit attempt is left behind
+    data = tmp_path / "t" / "data"
+    assert not data.exists() or not [p for p in data.rglob("*") if p.is_file()]
 
 
 def test_changefeed_exactly_once_reapply(spark, tmp_path):
